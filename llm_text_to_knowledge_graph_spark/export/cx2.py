@@ -64,20 +64,31 @@ def to_cx2(
     visual_properties: list | None = None,
     max_elements: int = 5_000_000,
 ) -> list:
-    """Render canonical node/edge tables as a CX2 aspect list."""
-    n_nodes = nodes.count()
-    n_edges = edges.count()
-    if n_nodes + n_edges > max_elements:
-        raise ValueError(
-            f"graph too large for a single CX2 document "
-            f"({n_nodes}+{n_edges} > {max_elements}); export per-partition "
-            f"subgraphs or raise max_elements"
-        )
+    """Render canonical node/edge tables as a CX2 aspect list.
 
-    node_pdf = nodes.select("node_id", "name", "label", "type", "url").toPandas()
-    edge_pdf = edges.select(
-        "edge_id", "s", "t", "interaction", "bel_expression", "text", "evidence"
-    ).toPandas()
+    The document depends only on the graph: nodes are emitted in
+    ``node_id`` order and edges in ``edge_id`` order, whatever order the
+    physical plan yields rows in. Each table's plan runs once; the
+    ``max_elements`` guard is a limit on the collect, so at most
+    ``max_elements + 1`` rows ever reach the driver."""
+    node_pdf = (
+        nodes.select("node_id", "name", "label", "type", "url")
+        .limit(max_elements + 1)
+        .toPandas()
+    )
+    edge_pdf = (
+        edges.select("edge_id", "s", "t", "interaction", "bel_expression", "text", "evidence")
+        .limit(max_elements + 1 - len(node_pdf))
+        .toPandas()
+    )
+    if len(node_pdf) + len(edge_pdf) > max_elements:
+        raise ValueError(
+            f"graph too large for a single CX2 document (more than "
+            f"{max_elements} nodes + edges); export per-partition subgraphs "
+            f"or raise max_elements"
+        )
+    node_pdf = node_pdf.sort_values("node_id", kind="stable")
+    edge_pdf = edge_pdf.sort_values("edge_id", kind="stable")
 
     node_aspect = []
     for r in node_pdf.itertuples(index=False):

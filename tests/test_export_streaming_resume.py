@@ -41,6 +41,39 @@ def test_cx2_export_aspects(spark, small_result, tmp_path):
     assert by_key["status"][0]["success"] is True
 
 
+def test_cx2_document_depends_only_on_the_graph(spark, small_result):
+    """The same graph with its rows in a different physical order renders
+    the byte-identical document."""
+    from pyspark.sql import functions as F
+
+    from llm_text_to_knowledge_graph_spark.export.cx2 import to_cx2
+
+    nodes, edges = small_result["nodes"], small_result["edges"]
+    doc = json.dumps(to_cx2(nodes, edges, name="n"))
+    shuffled = json.dumps(
+        to_cx2(
+            nodes.orderBy(F.desc("node_id")),
+            edges.repartition(7, "bel_expression").sortWithinPartitions(F.desc("evidence")),
+            name="n",
+        )
+    )
+    assert shuffled == doc
+    ids = [e["id"] for e in json.loads(doc)[5]["edges"]]
+    assert ids == sorted(ids)
+
+
+def test_cx2_size_guard(spark, small_result):
+    from llm_text_to_knowledge_graph_spark.export.cx2 import to_cx2
+
+    nodes, edges = small_result["nodes"], small_result["edges"]
+    total = nodes.count() + edges.count()
+    assert len(to_cx2(nodes, edges, name="n", max_elements=total)[5]["edges"]) == edges.count()
+    with pytest.raises(ValueError, match="too large"):
+        to_cx2(nodes, edges, name="n", max_elements=total - 1)
+    with pytest.raises(ValueError, match="too large"):
+        to_cx2(nodes, edges, name="n", max_elements=nodes.count() - 1)
+
+
 def test_streaming_incremental_exactly_once(spark, tmp_path):
     from llm_text_to_knowledge_graph_spark.operators.fused import extract_triples_fused
     from llm_text_to_knowledge_graph_spark.streaming.incremental import (
