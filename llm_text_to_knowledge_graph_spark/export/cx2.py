@@ -70,7 +70,7 @@ def to_cx2(
     ``node_id`` order and edges in ``edge_id`` order, whatever order the
     physical plan yields rows in. Each table's plan runs once; the
     ``max_elements`` guard is a limit on the collect, so at most
-    ``max_elements + 1`` rows ever reach the driver."""
+    ``max_elements + 1`` rows are ever collected."""
     node_pdf = (
         nodes.select("node_id", "name", "label", "type", "url")
         .limit(max_elements + 1)
@@ -87,8 +87,8 @@ def to_cx2(
             f"{max_elements} nodes + edges); export per-partition subgraphs "
             f"or raise max_elements"
         )
-    node_pdf = node_pdf.sort_values("node_id", kind="stable")
-    edge_pdf = edge_pdf.sort_values("edge_id", kind="stable")
+    node_pdf = node_pdf.sort_values("node_id")
+    edge_pdf = edge_pdf.sort_values("edge_id")
 
     node_aspect = []
     for r in node_pdf.itertuples(index=False):

@@ -5,7 +5,7 @@ string, label/type extraction, first-wins entry_name -> identifiers.org URL
 map, edge rows with source/target labels + bel_expression). The reference's
 in-memory dict counters become:
 
-  * node canonicalization  -> distinct + two-phase dense ids (plans/ids.py)
+  * node canonicalization  -> distinct + dense ids (plans/ids.py)
   * first-wins annotation  -> min_by over a deterministic occurrence key
   * edge endpoint lookup   -> two hash joins (broadcast when the node table
                               fits, sort-merge + AQE skew split otherwise;
@@ -164,8 +164,8 @@ def build_nodes(
     URL via name-then-label lookup (convert_to_cx2.py:151-166).
 
     id_strategy:
-      * ``dense``  — reference-parity 0..n-1 ids via two-phase ``dense_ids``
-        (CX2 export shape); costs the bucket-window shuffle chain.
+      * ``dense``  — reference-parity 0..n-1 ids via ``dense_ids``
+        (CX2 export shape); costs one ordered single-partition window.
       * ``hash``   — content-addressed ``xxhash64(name)`` ids; the node
         table is one distinct away from the triples and edges need no join
         at all (see ``build_edges``). This is the 100TB hot path; exports
@@ -217,7 +217,7 @@ def build_edges(
 
     ``dense`` strategy: endpoint-id lookup joins against the node table
     (broadcast when it fits, sort-merge + AQE skew split otherwise) and a
-    two-phase dense edge id. ``hash`` strategy: endpoint ids are recomputed
+    dense edge id. ``hash`` strategy: endpoint ids are recomputed
     from the names (``node_id_col``) and the edge id is a seed-fixed hash of
     the edge's identity key — ZERO joins and ZERO shuffles, so the whole
     edge build fuses into the extraction stage. ``nodes`` is unused there.

@@ -80,11 +80,10 @@ def ngram_lm(docs: DataFrame, text_col: str = "text", k: float = LM_K) -> dict:
     ).select("w1", F.element_at("_toks", F.col("pos") + 2).alias("w2"))
     # compute-once: `big` feeds bigrams AND (via uni) unigrams, and each
     # later broadcast build of those tables is its own job — without the
-    # materialization every build re-explodes the training sample (see
-    # plans/ids.py on the ReuseExchange miss). localCheckpoint, NOT
-    # persist: a persist here pins a CacheManager entry that nothing
-    # ever unpersists (the leak class plans/ids.py documents), while
-    # checkpoint blocks are GC-reclaimed when the model DataFrames die.
+    # materialization every build re-explodes the training sample.
+    # localCheckpoint, NOT persist: a persist here pins a CacheManager
+    # entry that nothing ever unpersists, while checkpoint blocks are
+    # GC-reclaimed when the model DataFrames die.
     # The checkpoint's AQE construction-eagerness is harmless for a
     # TERMINAL scoring operator built and evaluated in the same window
     # (unlike dense_ids, which composes into larger lazy plans).

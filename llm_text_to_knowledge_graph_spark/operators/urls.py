@@ -129,11 +129,11 @@ def resolve_redirects(
     10^9-row redirect table with chains of length L costs
     ceil(log2(L)) join rounds instead of L. The operator stays FULLY
     LAZY — no checkpoint inside (a "lazy" localCheckpoint runs every
-    upstream stage at plan-BUILD time under AQE, the round-5 dense_ids
-    finding; plans/ids.py) — at the cost of the logical plan doubling
-    per round (2^rounds copies of the base map's subtree: 16 at the
-    default budget, trivial for Catalyst; callers wanting 100+-hop
-    budgets should materialize the map between rounds themselves).
+    upstream stage at plan-BUILD time under AQE) — at the cost of the
+    logical plan doubling per round (2^rounds copies of the base map's
+    subtree: 16 at the default budget, trivial for Catalyst; callers
+    wanting 100+-hop budgets should materialize the map between rounds
+    themselves).
     ``max_hops`` rounds UP to the next power of two (the doubling
     granularity); hop counts stay EXACT because composition stops at
     terminals — a settled row carries its true chain length through

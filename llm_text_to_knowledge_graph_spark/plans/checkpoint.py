@@ -28,6 +28,7 @@ import shutil
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -242,7 +243,11 @@ class IcebergTableStore:
     def manifest(self, name: str) -> dict | None:
         try:
             rows = self.spark.sql(f"SHOW TBLPROPERTIES {self._t(name)}").collect()
-        except Exception:
+        except AnalysisException as e:
+            # only a missing table means "no snapshot yet"; any other
+            # failure (catalog down, bad name) must not force a recompute
+            if e.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+                raise
             return None
         props = {r["key"]: r["value"] for r in rows}
         return {

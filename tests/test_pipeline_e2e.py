@@ -93,3 +93,61 @@ def test_block_extractor_pipeline_matches_sentence_path(spark, result):
     nodes = {n["node_id"] for n in out["nodes"].collect()}
     for e in out["edges"].limit(200).collect():
         assert e["s"] in nodes and e["t"] in nodes
+
+
+def test_node_url_lookup_by_name_then_label_aggregates_once(spark):
+    """A node's URL is its name's annotation, else its label's. The two
+    lookups project the annotation map differently, yet the second
+    broadcast is a reused exchange, so the mention aggregate runs once."""
+    from llm_text_to_knowledge_graph_spark.operators.graph import annotation_map, build_nodes
+
+    triples = spark.createDataFrame(
+        [("X1", "increases", "a(HGNC:X2)"), ("a(HGNC:X1)", "decreases", "p(HGNC:X9)")],
+        "subj string, pred string, obj string",
+    )
+    mentions = spark.createDataFrame(
+        [
+            ("X1", "HGNC", "1", "u", 0, 0, 0),
+            ("X2", "HGNC", "2", "u", 0, 0, 1),
+            ("a(HGNC:X2)", "N", "N:7", "u", 0, 0, 2),
+        ],
+        "entry_name string, db string, id string, url string, para_idx int, sent_idx int, begin int",
+    )
+    nodes = build_nodes(triples, annotation_map(mentions))
+    urls = {r["name"]: r["url"] for r in nodes.collect()}
+    assert urls == {
+        "X1": "https://identifiers.org/HGNC:1",  # by name
+        "a(HGNC:X1)": "https://identifiers.org/HGNC:1",  # by label X1
+        "a(HGNC:X2)": "https://identifiers.org/N:7",  # name wins over label X2
+        "p(HGNC:X9)": None,
+    }
+    plan = nodes._jdf.queryExecution().executedPlan().toString()
+    assert any(
+        "ReusedExchange" in line and "BroadcastExchange" in line for line in plan.splitlines()
+    ), plan
+
+
+def test_dense_export_spark_job_budget(spark):
+    """Lazy dense-id run_pipeline(persist=True) + to_cx2 stays under a
+    Spark-job ceiling (15 jobs measured on this corpus; the two-phase
+    dense ids plus a count() per exported table took 37), and persists
+    only the fused extraction and the node table."""
+    from pyspark import StorageLevel
+
+    from llm_text_to_knowledge_graph_spark.export.cx2 import to_cx2
+
+    sc = spark.sparkContext
+    group = "dense-export-job-budget"
+    pages = pages_df(spark, 30, seed=3)
+    sc.setJobGroup(group, group)
+    try:
+        res = run_pipeline(spark, pages, build_alias_rows(3), id_strategy="dense", persist=True)
+        cx = to_cx2(res["nodes"], res["edges"], name="budget")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert cx[5]["edges"] and len(jobs) <= 20, len(jobs)
+        assert res["nodes"].storageLevel == StorageLevel.MEMORY_AND_DISK
+        for name in ("mentions", "triples", "edges"):
+            assert res[name].storageLevel == StorageLevel.NONE, name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.clearCache()

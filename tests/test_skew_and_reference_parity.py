@@ -63,7 +63,6 @@ def test_dense_ids_dedup_fold_matches_distinct_path(spark):
     """dense_ids(dedup=True) over duplicated keys == dense_ids over distinct
     keys, with one fewer exchange in the plan."""
     from llm_text_to_knowledge_graph_spark.plans.ids import dense_ids
-    from pyspark.sql import functions as F
 
     rows = [(f"k{i % 37}", i % 5) for i in range(500)]
     df = spark.createDataFrame(rows, "a string, b int")
@@ -74,77 +73,69 @@ def test_dense_ids_dedup_fold_matches_distinct_path(spark):
     )
     n = via_fold.count()
     assert sorted(r.id for r in via_fold.collect()) == list(range(n))
-    # the fold saves the distinct's exchange: strictly fewer shuffles overall.
-    # Compare with materialize_once=False — the cached path reads an
-    # InMemoryTableScan, hiding the upstream exchanges this assertion is
-    # about.
-    lazy_fold = dense_ids(
-        df, ["a", "b"], out_col="id", buckets=8, dedup=True,
-        materialize_once=False,
-    )
-    lazy_dist = dense_ids(
-        df.distinct(), ["a", "b"], out_col="id", buckets=8,
-        materialize_once=False,
-    )
-    lazy_fold.collect()
-    lazy_dist.collect()
-    plan_fold = lazy_fold._jdf.queryExecution().executedPlan().toString()
-    plan_dist = lazy_dist._jdf.queryExecution().executedPlan().toString()
+    # the fold saves the distinct's exchange: strictly fewer shuffles overall
+    plan_fold = via_fold._jdf.queryExecution().executedPlan().toString()
+    plan_dist = via_distinct._jdf.queryExecution().executedPlan().toString()
     assert plan_fold.count("Exchange") < plan_dist.count("Exchange")
 
 
-def test_dense_ids_laziness_and_materialize_modes(spark):
-    """dense_ids construction must run ZERO jobs, in both modes — the
-    round-4 localCheckpoint variant violated this under AQE (checkpoint
-    forces queryExecution.toRdd, which materializes every upstream query
-    stage at plan-BUILD time), which made merely composing nodes/edges
-    execute the whole extraction and halved the benched modular-pipeline
-    throughput.
+def _expected_dense_ids(spark, df, key_cols, buckets):
+    """Ids by the documented definition, computed in Python: rank of
+    the distinct key in (pmod(hash(key), buckets), key) order."""
+    bkt = F.pmod(F.hash(*key_cols), F.lit(buckets)).alias("_bkt")
+    keyed = {(r["_bkt"], *r[1:]) for r in df.select(bkt, *key_cols).collect()}
+    return {k[1:]: i for i, k in enumerate(sorted(keyed))}
 
-    Execution counts are mode-dependent and DELIBERATE: the default
-    (materialize_once=False, pure/stateless — no CacheManager entry
-    pinned forever, the leak that OOM'd the 1 GB scaling-job driver at
-    trial 2) lets the offsets broadcast job re-execute the bucketed
-    subtree once (ReuseExchange misses after not-null inference);
-    materialize_once=True pins exactly-once via a lazy persist."""
-    import pandas as pd
 
+@pytest.mark.parametrize("dedup", [False, True])
+@pytest.mark.parametrize("buckets", [1, 8, 256])
+@pytest.mark.parametrize("shape", ["string", "multi"])
+def test_dense_ids_match_bucket_key_order(spark, dedup, buckets, shape):
+    """Every id equals the key's rank in (pmod(hash(key), buckets), key)
+    order — the ids the two-phase bucket-rank + prefix-offset assignment
+    produced, so node and edge ids are unchanged by the one-window form."""
     from llm_text_to_knowledge_graph_spark.plans.ids import dense_ids
 
-    def make(acc_):
-        def counting(batches):
-            for pdf in batches:
-                acc_.add(len(pdf))
-                yield pdf
-        return counting
+    words = ["a", "B", "é", "zz", "k1", "k10", "k2", "日本", "a b", ""]
+    if shape == "string":
+        key_cols, schema = ["k"], "k string, v int"
+        rows = [(f"{words[i % 10]}{i % 23}", i) for i in range(300)]
+    else:
+        key_cols, schema = ["k", "n"], "k string, n int, v int"
+        rows = [(words[i % 10], (i * 7) % 13 - 6, i) for i in range(300)]
+    df = spark.createDataFrame(rows, schema).repartition(5)
+    if not dedup:
+        df = df.dropDuplicates(key_cols)
+    expected = _expected_dense_ids(spark, df, key_cols, buckets)
+    out = dense_ids(df, key_cols, out_col="id", buckets=buckets, dedup=dedup)
+    got = [(tuple(r[c] for c in key_cols), r["id"]) for r in out.collect()]
+    assert len(got) == len(expected)
+    assert dict(got) == expected
+    assert out.columns == df.columns + ["id"]
+
+
+def test_dense_ids_laziness_and_single_execution(spark):
+    """dense_ids construction runs ZERO jobs (a "lazy" localCheckpoint
+    violates this under AQE: checkpoint forces queryExecution.toRdd, which
+    materializes every upstream query stage at plan-build time), and each
+    action executes the input exactly once."""
+    from llm_text_to_knowledge_graph_spark.plans.ids import dense_ids
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def counting(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
 
     df = spark.createDataFrame(
         [(f"key-{i}",) for i in range(400)], "name string"
     ).repartition(4)
-
-    # default: lazy construction, stateless, upstream runs once per
-    # consumer (ranked window + offsets broadcast = 2x)
-    acc = spark.sparkContext.accumulator(0)
     out = dense_ids(
-        df.mapInPandas(make(acc), schema="name string"),
+        df.mapInPandas(counting, schema="name string"),
         ["name"], out_col="id", buckets=8,
     )
     assert acc.value == 0  # zero jobs at plan-build
     assert out.count() == 400
+    assert acc.value == 400  # the input ran once for the action
     assert sorted(r.id for r in out.collect()) == list(range(400))
-    assert acc.value >= 400  # ran; exactly-once NOT promised here
-
-    # materialize_once=True: still lazy at build, exactly-once at run
-    acc2 = spark.sparkContext.accumulator(0)
-    out2 = dense_ids(
-        df.mapInPandas(make(acc2), schema="name string"),
-        ["name"], out_col="id", buckets=8, materialize_once=True,
-    )
-    assert acc2.value == 0
-    n = out2.count()
-    assert n == 400
-    assert sorted(r.id for r in out2.collect()) == list(range(400))
-    # every downstream action re-reads the cached blocks, never the
-    # Python stage: the accumulator saw each row exactly once
-    assert acc2.value == 400
-    spark.catalog.clearCache()  # drop the pinned b-cache entry

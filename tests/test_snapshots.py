@@ -1,5 +1,7 @@
 """TableStore snapshot history: time travel to retained snapshots."""
 
+import pytest
+
 from llm_text_to_knowledge_graph_spark.plans.checkpoint import TableStore
 
 
@@ -74,6 +76,34 @@ def test_iceberg_store_manifest_contract(spark, tmp_path):
     assert set(m) <= set(sm)
     assert callable(getattr(ice, "write_metrics"))
     assert callable(getattr(shim, "write_metrics"))
+
+
+def test_iceberg_manifest_absent_only_on_table_not_found(spark):
+    """A missing table reads as "no manifest"; every other error from the
+    catalog propagates instead of silently forcing a recompute."""
+    from pyspark.errors import AnalysisException
+
+    from llm_text_to_knowledge_graph_spark.plans.checkpoint import IcebergTableStore
+
+    class FailingSpark:
+        def __init__(self, sql):
+            self.sql = sql
+
+    def unreachable(q):
+        raise RuntimeError("catalog unreachable")
+
+    ice = IcebergTableStore.__new__(IcebergTableStore)
+    ice.catalog, ice.ns = "spark_catalog", "default"
+
+    # real analyzer errors: the table is missing / the statement is malformed
+    ice.spark = FailingSpark(lambda q: spark.sql(q.replace("default.t", "default.kg_no_such_table")))
+    assert ice.manifest("t") is None
+    ice.spark = FailingSpark(lambda q: spark.sql(q.replace("SHOW TBLPROPERTIES", "SHOW TBLPROPERTY")))
+    with pytest.raises(AnalysisException):
+        ice.manifest("t")
+    ice.spark = FailingSpark(unreachable)
+    with pytest.raises(RuntimeError, match="unreachable"):
+        ice.manifest("t")
 
 
 def test_make_table_store_picks_shim_without_catalog(spark, tmp_path):
