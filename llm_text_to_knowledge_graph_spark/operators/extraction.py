@@ -33,7 +33,7 @@ Pattern families
   group association   "A and B are associated"
 
 All functions are pure (no Spark imports in the hot path) so the engine runs
-inside Arrow-batched pandas UDFs on any partitioning. Statements are deduped
+inside the one extraction crossing (operators/fused.py) on any partitioning. Statements are deduped
 per block by semantic signature (subject entity, relation, object entity,
 object-localization wrapper, pmods) so surface-variant patterns that express
 the same fact emit once.
@@ -42,10 +42,7 @@ the same fact emit once.
 from __future__ import annotations
 
 import re
-import uuid
 from functools import lru_cache
-
-import pandas as pd
 
 from ..functions.bel import NS_FUNC, make_term
 from .statements import extract_from_sentence
@@ -3502,59 +3499,25 @@ def _active_flags(trail: list[str], after_right: str):
 def extract_statements_extended(
     paragraphs, alias_rows: list, text_col: str = "text"
 ):
-    """PARAGRAPHS(url, warc_ts, para_idx, text) -> STATEMENTS with the
-    extended block-level pattern engine.
+    """PARAGRAPHS(url, warc_ts, para_idx, ``text_col``) -> STATEMENTS with
+    the extended block-level pattern engine, ``sent_idx = 0``.
 
-    The alias dictionary is broadcast; the matcher builds once per Python
-    worker (same executor-local cache as detect_mentions). Mention scan and
-    pattern extraction run fused in a single pandas UDF, so the stage is a
-    map-only scan — no shuffle, broadcast-sized driver footprint.
+    The block projection of the one extraction kernel
+    (``operators/fused.py``) over a paragraphs table: one Python crossing,
+    the matcher built once per worker, a map-only scan — no shuffle,
+    broadcast-sized driver footprint.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType
+    from ..schemas import STATEMENTS
+    from .fused import crossing, statement_rows
 
-    from ..schemas import STATEMENT
-    from .mentions import _get_matcher
+    def read(pdf):
+        for url, warc_ts, para_idx, text in zip(
+            pdf["url"], pdf["warc_ts"], pdf["para_idx"], pdf[text_col]
+        ):
+            yield url, warc_ts, ((para_idx, text),)
 
-    spark = paragraphs.sparkSession
-    bc = spark.sparkContext.broadcast(list(alias_rows))
-    token = uuid.uuid4().hex
-
-    @F.pandas_udf(ArrayType(STATEMENT))
-    def _extract(txt: pd.Series) -> pd.Series:
-        matcher = _get_matcher(bc, token)
-        out = []
-        for t in txt:
-            t = normalize_block_text(t)
-            ms = [
-                {"begin": s, "end": e, "alias": a, "db": db, "id": i,
-                 "entry_name": n, "score": p}
-                for (s, e, a, db, i, n, p) in matcher.find(t)
-            ]
-            out.append(
-                [
-                    {"bel_statement": stmt, "evidence": ev}
-                    for stmt, ev in extract_from_block(t, ms)
-                ]
-            )
-        return pd.Series(out)
-
-    return (
-        paragraphs.withColumn("results", _extract(F.col(text_col)))
-        .filter(F.size("results") > 0)
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            F.lit(0).alias("sent_idx"),
-            F.explode("results").alias("r"),
-        )
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.col("r.bel_statement").alias("bel_statement"),
-            F.col("r.evidence").alias("evidence"),
-        )
+    return crossing(
+        paragraphs.select("url", "warc_ts", "para_idx", text_col),
+        alias_rows, STATEMENTS, statement_rows, "block",
+        sentences=False, lang=None, read=read,
     )

@@ -1,161 +1,189 @@
-"""Fused extraction: pages -> triples in ONE Python crossing.
+"""One extraction kernel behind one Python crossing.
 
-The modular pipeline (paragraphs | sentences | mentions | statements |
-triples) chains five Arrow UDF nodes — five JVM<->Python serialization
-round-trips per row batch. Per page the chain is embarrassingly parallel,
-so the physical fast path runs the same pure functions in a single
-mapInPandas pass: one Arrow crossing, no intermediate array<struct>
-serialization, identical output (asserted in tests).
+The reference extracts one paragraph at a time: ground the mentions
+(grounding_genes.py:13-52), extract statements (sentence_level_extraction.py
+:43-78), split them into triples (transform_bel_statements.py:1-76). That
+loop lives here once:
 
-Use the modular stages when per-stage checkpoint tables are wanted
-(resume/lineage); use the fused operator for max-throughput lazy runs.
+* ``extract_kernel`` — pure Python. ``(para_idx, paragraph)`` pairs -> one
+  row per sentence: ``(para_idx, sent_idx, sentence, mentions, parts)``,
+  where ``parts`` are ``(subj, pred, obj, bel_statement, evidence)``
+  tuples. Two engines: ``sentence`` runs the exact-phrase engine
+  (``statements.extract_parts_from_sentence``) on each sentence;
+  ``block`` runs the extended paragraph engine
+  (``extraction.extract_from_block``) on the normalized paragraph, and the
+  paragraph's results ride on its ``sent_idx = 0`` row.
+* ``crossing`` — the one ``mapInPandas``. It owns the ``lang`` filter, the
+  alias broadcast, the per-worker matcher cache (``mentions._get_matcher``),
+  the batch loop (``extract_batch``, which also runs without Spark), and
+  typed empty frames derived from the output schema.
+* The public entry points are projections of the kernel rows
+  (``triple_rows``, ``statement_rows``, ``sentence_rows``):
+  ``extract_triples_fused`` / ``extract_triples_fused_block`` emit flat
+  TRIPLES rows; ``extract_sentence_level_fused`` emits sentence rows with
+  mention structs and parsed results — the backbone of lazy
+  ``plans.pipeline.run_pipeline``, whose stages are relational views of it;
+  ``extraction.extract_statements_extended`` emits block STATEMENTS from a
+  paragraphs table.
+
+The modular per-stage UDFs (``operators.paragraphs`` / ``mentions`` /
+``statements`` / ``triples``) remain for checkpointed runs, where each stage
+is a table; tests pin every projection here to that chain, stage by stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import uuid
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-import uuid
-
 from ..functions.bel import split_statement
 from ..schemas import MENTION, SENTENCES, TRIPLES
 from ..sources.html_extract import extract_paragraphs_text, split_sentences
-from .mentions import AliasMatcher
+from .extraction import extract_from_block, normalize_block_text
+from .mentions import AliasMatcher, _get_matcher
 from .statements import extract_parts_from_sentence
 
-# keyed by per-call uuid token, never id() (address reuse serves stale dicts)
-_MATCHER_CACHE: dict[str, AliasMatcher] = {}
+ENGINES = ("sentence", "block")
 
 
-def extract_triples_fused(pages: DataFrame, alias_rows: list) -> DataFrame:
-    """pages -> TRIPLES with identical semantics to the five-stage chain."""
-    spark = pages.sparkSession
-    bc = spark.sparkContext.broadcast(list(alias_rows))
-    token = uuid.uuid4().hex
+def _mentions(matcher: AliasMatcher, text: str) -> list[dict]:
+    return [
+        {"begin": b, "end": e, "alias": a, "db": db, "id": i, "entry_name": n, "score": p}
+        for (b, e, a, db, i, n, p) in matcher.find(text)
+    ]
+
+
+def extract_kernel(
+    paragraphs: Iterable[tuple[int, str]],
+    matcher: AliasMatcher,
+    engine: str = "sentence",
+    sentences: bool = True,
+) -> Iterator[tuple]:
+    """``(para_idx, paragraph)`` pairs -> ``(para_idx, sent_idx, sentence,
+    mentions, parts)`` rows, one per sentence.
+
+    ``sentence`` engine: parts come pre-split from the sentence engine
+    (``split_statement(bel_statement)`` would return exactly them — pinned
+    by tests/test_bel_properties.py). ``block`` engine: every block
+    statement is split once; unary or unsplittable statements keep ``None``
+    parts, so the statements view keeps them and the triples view drops
+    them. The block results ride on the paragraph's ``sent_idx = 0`` row
+    (a paragraph of ``extract_paragraphs_text`` always has a sentence);
+    with ``sentences=False`` the block engine skips the sentence split and
+    the sentence mentions and yields that one row per paragraph, with
+    ``sentence`` and ``mentions`` set to ``None``.
+    """
+    for para_idx, para in paragraphs:
+        if engine != "block":
+            for sent_idx, sentence in enumerate(split_sentences(para)):
+                ms = _mentions(matcher, sentence)
+                yield para_idx, sent_idx, sentence, ms, extract_parts_from_sentence(
+                    sentence, ms
+                )
+            continue
+        block = normalize_block_text(para)
+        parts = [
+            (*split_statement(stmt), stmt, evidence)
+            for stmt, evidence in extract_from_block(block, _mentions(matcher, block))
+        ]
+        if not sentences:
+            yield para_idx, 0, None, None, parts
+            continue
+        for sent_idx, sentence in enumerate(split_sentences(para)):
+            yield para_idx, sent_idx, sentence, _mentions(matcher, sentence), (
+                [] if sent_idx else parts
+            )
+
+
+def _pages(pdf: pd.DataFrame) -> Iterator[tuple]:
+    for url, warc_ts, html, text in zip(
+        pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"]
+    ):
+        yield url, warc_ts, enumerate(extract_paragraphs_text(html, text))
+
+
+# pandas dtypes Arrow casts to the Spark type; object for everything else
+_EMPTY_DTYPES = {"timestamp": "datetime64[us]", "int": "int32"}
+
+
+def _empty_frame(schema: StructType) -> pd.DataFrame:
+    # a frame built from empty lists has object columns, which Arrow cannot
+    # cast to timestamp/int — every column gets its schema's dtype instead
+    return pd.DataFrame(
+        {
+            f.name: pd.Series([], dtype=_EMPTY_DTYPES.get(f.dataType.simpleString(), "object"))
+            for f in schema.fields
+        }
+    )
+
+
+def extract_batch(
+    pdf: pd.DataFrame,
+    matcher: AliasMatcher,
+    project: Callable[..., Iterable[tuple]],
+    engine: str = "sentence",
+    sentences: bool = True,
+    read: Callable[[pd.DataFrame], Iterator[tuple]] = _pages,
+) -> list[tuple]:
+    """One input batch -> output tuples: ``read`` turns the batch into
+    ``(url, warc_ts, paragraphs)`` items, the kernel turns paragraphs into
+    sentence rows, and ``project(url, warc_ts, *kernel_row)`` turns each
+    into output tuples. The body of the crossing, runnable without Spark."""
+    rows: list[tuple] = []
+    for url, warc_ts, paragraphs in read(pdf):
+        for row in extract_kernel(paragraphs, matcher, engine, sentences):
+            rows.extend(project(url, warc_ts, *row))
+    return rows
+
+
+def crossing(
+    df: DataFrame,
+    alias_rows: list,
+    schema: StructType,
+    project: Callable[..., Iterable[tuple]],
+    engine: str = "sentence",
+    sentences: bool = True,
+    lang: str | None = "en",
+    read: Callable[[pd.DataFrame], Iterator[tuple]] = _pages,
+) -> DataFrame:
+    """The one Python crossing: ``df`` (filtered to ``lang`` unless None)
+    -> ``extract_batch`` per Arrow batch -> ``schema`` rows. ``project``
+    emits tuples in ``schema`` order."""
+    if engine not in ENGINES:
+        raise ValueError(f"unknown extractor {engine!r}")
+    bc = df.sparkSession.sparkContext.broadcast(list(alias_rows))
+    token = uuid.uuid4().hex  # cache key; never id(), addresses are reused
+    names = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _MATCHER_CACHE.get(token)
-        if matcher is None:
-            if len(_MATCHER_CACHE) >= 8:  # bound worker memory across runs
-                _MATCHER_CACHE.clear()
-            matcher = AliasMatcher(bc.value)
-            _MATCHER_CACHE[token] = matcher
+        matcher = _get_matcher(bc, token)
         for pdf in batches:
-            out = {k: [] for k in (
-                "url", "warc_ts", "para_idx", "sent_idx",
-                "subj", "pred", "obj", "bel_statement", "evidence")}
-            for url, warc_ts, html, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"]
-            ):
-                for para_idx, para in enumerate(extract_paragraphs_text(html, text)):
-                    for sent_idx, sentence in enumerate(split_sentences(para)):
-                        mentions = [
-                            {"begin": b, "end": e, "db": db, "entry_name": n}
-                            for (b, e, _a, db, _i, n, _p) in matcher.find(sentence)
-                        ]
-                        # parts come pre-split (split_statement(stmt) would
-                        # return exactly these — pinned by property test)
-                        for subj, pred, obj, stmt, evidence in (
-                            extract_parts_from_sentence(sentence, mentions)
-                        ):
-                            out["url"].append(url)
-                            out["warc_ts"].append(warc_ts)
-                            out["para_idx"].append(para_idx)
-                            out["sent_idx"].append(sent_idx)
-                            out["subj"].append(subj)
-                            out["pred"].append(pred)
-                            out["obj"].append(obj)
-                            out["bel_statement"].append(stmt)
-                            out["evidence"].append(evidence)
-            pdf_out = pd.DataFrame(out)
-            if pdf_out.empty:
-                # empty object columns default to float64, which Arrow cannot
-                # cast to timestamp/int — pin the dtypes explicitly
-                pdf_out = pdf_out.astype(
-                    {
-                        "url": "object", "warc_ts": "datetime64[us]",
-                        "para_idx": "int32", "sent_idx": "int32",
-                        "subj": "object", "pred": "object", "obj": "object",
-                        "bel_statement": "object", "evidence": "object",
-                    }
-                )
-            yield pdf_out
+            rows = extract_batch(pdf, matcher, project, engine, sentences, read)
+            yield pd.DataFrame(dict(zip(names, zip(*rows)))) if rows else _empty_frame(schema)
 
-    return pages.filter("lang = 'en'").mapInPandas(run, schema=TRIPLES)
+    if lang is not None:
+        df = df.filter(F.col("lang") == lang)
+    return df.mapInPandas(run, schema=schema)
 
 
-def extract_triples_fused_block(pages: DataFrame, alias_rows: list) -> DataFrame:
-    """pages -> TRIPLES via the EXTENDED block engine, one Python crossing.
-
-    Same fusion as ``extract_triples_fused`` but the per-paragraph pattern
-    engine is ``extraction.extract_from_block`` (coordination, displaced-
-    agent passives, nominalizations, fold continuation, knockout inference)
-    — the engine that earns the real-gold recall. Statements carry
-    ``sent_idx = 0`` (evidence spans the paragraph), matching the modular
-    ``extractor="block"`` pipeline path, so outputs are interchangeable."""
-    from .extraction import extract_from_block, normalize_block_text
-
-    spark = pages.sparkSession
-    bc = spark.sparkContext.broadcast(list(alias_rows))
-    token = uuid.uuid4().hex
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _MATCHER_CACHE.get(token)
-        if matcher is None:
-            if len(_MATCHER_CACHE) >= 8:
-                _MATCHER_CACHE.clear()
-            matcher = AliasMatcher(bc.value)
-            _MATCHER_CACHE[token] = matcher
-        for pdf in batches:
-            out = {k: [] for k in (
-                "url", "warc_ts", "para_idx", "sent_idx",
-                "subj", "pred", "obj", "bel_statement", "evidence")}
-            for url, warc_ts, html, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"]
-            ):
-                for para_idx, para in enumerate(extract_paragraphs_text(html, text)):
-                    para = normalize_block_text(para)
-                    mentions = [
-                        {"begin": b, "end": e, "alias": a, "db": db,
-                         "id": i, "entry_name": n, "score": p}
-                        for (b, e, a, db, i, n, p) in matcher.find(para)
-                    ]
-                    for stmt, evidence in extract_from_block(para, mentions):
-                        subj, pred, obj = split_statement(stmt)
-                        if not (subj and pred and obj):
-                            continue
-                        out["url"].append(url)
-                        out["warc_ts"].append(warc_ts)
-                        out["para_idx"].append(para_idx)
-                        out["sent_idx"].append(0)
-                        out["subj"].append(subj)
-                        out["pred"].append(pred)
-                        out["obj"].append(obj)
-                        out["bel_statement"].append(stmt)
-                        out["evidence"].append(evidence)
-            pdf_out = pd.DataFrame(out)
-            if pdf_out.empty:
-                pdf_out = pdf_out.astype(
-                    {
-                        "url": "object", "warc_ts": "datetime64[us]",
-                        "para_idx": "int32", "sent_idx": "int32",
-                        "subj": "object", "pred": "object", "obj": "object",
-                        "bel_statement": "object", "evidence": "object",
-                    }
-                )
-            yield pdf_out
-
-    return pages.filter("lang = 'en'").mapInPandas(run, schema=TRIPLES)
+def triple_rows(url, warc_ts, para_idx, sent_idx, _sentence, _mentions, parts):
+    return [
+        (url, warc_ts, para_idx, sent_idx, *p)
+        for p in parts
+        if p[0] is not None and p[1] is not None and p[2] is not None
+    ]
 
 
-# sentence-level fused extraction: everything the modular chain computes, in
-# one crossing. results.subj/pred/obj are pre-parsed so the triples stage
-# needs no further UDF.
+def statement_rows(url, warc_ts, para_idx, sent_idx, _sentence, _mentions, parts):
+    return [(url, warc_ts, para_idx, sent_idx, stmt, ev) for *_spo, stmt, ev in parts]
+
+
+# results.subj/pred/obj are pre-parsed so the triples view needs no UDF
 _SENT_RESULT = StructType(
     [
         StructField("subj", StringType(), True),
@@ -173,77 +201,42 @@ SENT_EXTRACT = StructType(
         StructField("results", ArrayType(_SENT_RESULT), False),
     ]
 )
+_RESULT_KEYS = _SENT_RESULT.fieldNames()
+
+
+def sentence_rows(url, warc_ts, para_idx, sent_idx, sentence, mentions, parts):
+    results = [dict(zip(_RESULT_KEYS, p)) for p in parts]
+    return ((url, warc_ts, para_idx, sent_idx, sentence, mentions, results),)
+
+
+def extract_triples_fused(pages: DataFrame, alias_rows: list) -> DataFrame:
+    """pages -> TRIPLES with the sentence engine, one Python crossing."""
+    return crossing(pages, alias_rows, TRIPLES, triple_rows)
+
+
+def extract_triples_fused_block(pages: DataFrame, alias_rows: list) -> DataFrame:
+    """pages -> TRIPLES with the EXTENDED block engine, one Python crossing.
+
+    The block engine (``extraction.extract_from_block``: coordination,
+    displaced-agent passives, nominalizations, fold continuation, knockout
+    inference) earns the real-gold recall. Triples carry ``sent_idx = 0``
+    (evidence spans the paragraph), as in ``run_pipeline(extractor="block")``."""
+    return crossing(pages, alias_rows, TRIPLES, triple_rows, "block", sentences=False)
 
 
 def extract_sentence_level_fused(
-    pages: DataFrame, alias_rows: list, lang: str | None = "en"
+    pages: DataFrame,
+    alias_rows: list,
+    lang: str | None = "en",
+    engine: str = "sentence",
 ) -> DataFrame:
-    """pages -> sentence rows + full mention structs + parsed statements, ONE
-    Python crossing.
+    """pages -> SENT_EXTRACT: sentence rows + full mention structs + parsed
+    statements, one Python crossing.
 
-    This is the lazy-mode backbone of ``plans.pipeline.run_pipeline``: every
-    modular stage (sentences, mentions, statements, triples, flat_mentions)
-    is a relational projection/explode of this output, so the five-UDF chain
-    collapses to one Arrow round-trip while keeping per-stage DataFrames
-    byte-identical to the modular operators (asserted in test_fused).
-    """
-    spark = pages.sparkSession
-    bc = spark.sparkContext.broadcast(list(alias_rows))
-    token = uuid.uuid4().hex
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _MATCHER_CACHE.get(token)
-        if matcher is None:
-            if len(_MATCHER_CACHE) >= 8:
-                _MATCHER_CACHE.clear()
-            matcher = AliasMatcher(bc.value)
-            _MATCHER_CACHE[token] = matcher
-        cols = (
-            "url", "warc_ts", "para_idx", "sent_idx",
-            "sentence", "mentions", "results",
-        )
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for url, warc_ts, html, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"]
-            ):
-                for para_idx, para in enumerate(extract_paragraphs_text(html, text)):
-                    for sent_idx, sentence in enumerate(split_sentences(para)):
-                        mentions = [
-                            {
-                                "begin": b, "end": e, "alias": a, "db": db,
-                                "id": i, "entry_name": n, "score": p,
-                            }
-                            for (b, e, a, db, i, n, p) in matcher.find(sentence)
-                        ]
-                        results = []
-                        for subj, pred, obj, stmt, evidence in (
-                            extract_parts_from_sentence(sentence, mentions)
-                        ):
-                            results.append(
-                                {
-                                    "subj": subj, "pred": pred, "obj": obj,
-                                    "bel_statement": stmt, "evidence": evidence,
-                                }
-                            )
-                        out["url"].append(url)
-                        out["warc_ts"].append(warc_ts)
-                        out["para_idx"].append(para_idx)
-                        out["sent_idx"].append(sent_idx)
-                        out["sentence"].append(sentence)
-                        out["mentions"].append(mentions)
-                        out["results"].append(results)
-            pdf_out = pd.DataFrame(out)
-            if pdf_out.empty:
-                pdf_out = pdf_out.astype(
-                    {
-                        "url": "object", "warc_ts": "datetime64[us]",
-                        "para_idx": "int32", "sent_idx": "int32",
-                        "sentence": "object", "mentions": "object",
-                        "results": "object",
-                    }
-                )
-            yield pdf_out
-
-    src = pages.filter(F.col("lang") == lang) if lang is not None else pages
-    return src.mapInPandas(run, schema=SENT_EXTRACT)
+    This is the backbone of lazy ``plans.pipeline.run_pipeline``: its
+    sentences, mentions, flat_mentions, statements and triples stages are
+    relational projections/explodes of this output, row-identical to the
+    modular stages (asserted in tests/test_fused.py). With
+    ``engine="block"`` the mentions stay per sentence and a paragraph's
+    block statements ride on its ``sent_idx = 0`` row."""
+    return crossing(pages, alias_rows, SENT_EXTRACT, sentence_rows, engine, lang=lang)

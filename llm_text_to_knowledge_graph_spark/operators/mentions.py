@@ -2,8 +2,8 @@
 
 Reference parity: grounding_genes.py:13-52 (Gilda annotate per paragraph,
 keep each mention's top match (db, id, entry_name)). Here the dictionary is
-a Spark broadcast; scanning is a leftmost-longest compiled-regex pass inside
-an Arrow-batched pandas UDF (no per-row Python crossing). Disambiguation of
+a Spark broadcast; scanning is a leftmost-longest token-index pass inside
+an Arrow-batched Python crossing (no per-row Python call). Disambiguation of
 an ambiguous surface form is top-1 by prior with a stable (db, id) tie-break
 — the relational equivalent of "keep Gilda's top match".
 
@@ -30,12 +30,6 @@ from ..schemas import MENTION
 _MATCHER_CACHE: dict[str, "AliasMatcher"] = {}
 
 
-# above this many aliases the alternation regex's O(|text| * |alternates|)
-# worst case starts to dominate; the Aho-Corasick automaton scans in
-# O(|text| + matches) regardless of dictionary size, and the token-index
-# engine scans in O(tokens) dict lookups
-_AC_THRESHOLD = 2048
-
 # token-index guard: if any first token keys more candidate aliases than
 # this, a hostile text repeating that token degrades the per-token probe;
 # fall back to the automaton, whose per-char cost is dictionary-invariant
@@ -43,7 +37,7 @@ _TOK_MAX_CANDIDATES = 256
 
 _TOKEN_RE = re.compile(r"[\w-]+")
 
-_WB_RE = re.compile(r"[\w-]")  # the boundary class of the regex engine
+_WB_RE = re.compile(r"[\w-]")  # the alias word-boundary class
 _ASCII_WB = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_-"
 )
@@ -73,36 +67,34 @@ def _top1(alias_rows) -> dict[str, tuple[str, str, str, float]]:
 
 
 class AliasMatcher:
-    """Leftmost-longest dictionary matcher over word-boundary alias spans.
+    """Leftmost-longest dictionary matcher over word-boundary alias spans:
+    at each position the longest boundary-valid alias wins and the scan
+    resumes at its end.
 
-    Two interchangeable engines with identical match semantics (pinned by
-    tests/test_ac_matcher.py):
+    Two interchangeable engines with identical match semantics (pinned
+    against an alternation-regex oracle by tests/test_ac_matcher.py):
 
-      * ``regex`` — one alternation ordered by length desc; at each position
-        the longest boundary-valid alias wins, scan resumes at match end.
-        Simple, fast for small dictionaries.
-      * ``ac``    — Aho-Corasick automaton (pure Python, built once per
-        worker from the broadcast rows). All occurrences are collected in a
-        single O(|text|) pass, then reduced to the same leftmost-longest
-        non-overlapping selection. Per-char cost is dictionary-invariant —
-        the worst-case-safe big-dictionary engine.
       * ``tok``   — token-index scan: tokenize the text on the boundary
         class with one C-level ``finditer`` pass, hash each whole token
         against a dict keyed by every alias's first token, verify the few
         candidates (longest first) with ``str.startswith`` + one right-
         boundary char test. Python executes per TOKEN, not per char, and
         every hot operation (regex scan, dict probe, prefix compare) runs
-        in C — profiled ~7x faster than ``ac`` on web text. Matches any
-        alias whose first char is in ``[\\w-]`` via the index; the rare
-        aliases that START with a non-word char (e.g. ``(+)-catechin``)
-        are swept by a small zero-width-lookahead alternation and merged
-        through the same longest-per-start greedy tail, so the output is
-        bit-identical to ``ac``/``regex`` for ANY dictionary.
+        in C — profiled ~7x faster than ``ac`` on web text, and flat in
+        dictionary size. Matches any alias whose first char is in
+        ``[\\w-]`` via the index; the rare aliases that START with a
+        non-word char (e.g. ``(+)-catechin``) are swept by a small
+        zero-width-lookahead alternation and merged through the same
+        longest-per-start greedy tail, so the output is bit-identical to
+        ``ac`` for ANY dictionary.
+      * ``ac``    — Aho-Corasick automaton (pure Python, built once per
+        worker from the broadcast rows). All occurrences are collected in a
+        single O(|text|) pass, then reduced to the same leftmost-longest
+        non-overlapping selection. Per-char cost is dictionary-invariant.
 
-    ``engine='auto'`` (default) picks ``tok`` at >= 2048 aliases (the
-    at-scale engine), falling back to ``ac`` only if some first token keys
-    > 256 candidate aliases (pathological sharing, where the per-token
-    probe loses its O(1) bound).
+    ``engine='auto'`` (default) picks ``tok``, falling back to ``ac`` only
+    if some first token keys > 256 candidate aliases (pathological sharing,
+    where the per-token probe loses its O(1) bound).
     """
 
     def __init__(
@@ -112,28 +104,17 @@ class AliasMatcher:
     ):
         best = _top1(alias_rows)
         self.lookup = best
-        if engine == "auto":
-            if len(best) >= _AC_THRESHOLD:
-                engine = "tok"
-                self._build_tok(list(best))
-                if self._tok_max_cands > _TOK_MAX_CANDIDATES:
-                    engine = "ac"
-            else:
-                engine = "regex"
-        elif engine == "tok":
+        if engine not in ("auto", "tok", "ac"):
+            raise ValueError(f"unknown matcher engine {engine!r}")
+        if engine != "ac":
             self._build_tok(list(best))
-        self.engine = engine
-        if engine == "tok":
-            self.rx = None
-        elif engine == "ac":
+            if engine == "auto":
+                engine = (
+                    "ac" if self._tok_max_cands > _TOK_MAX_CANDIDATES else "tok"
+                )
+        if engine == "ac":
             self._build_ac(list(best))
-            self.rx = None
-        else:
-            ordered = sorted(best, key=len, reverse=True)
-            pattern = "|".join(re.escape(a) for a in ordered)
-            self.rx = (
-                re.compile(rf"(?<![\w-])({pattern})(?![\w-])") if ordered else None
-            )
+        self.engine = engine
 
     # -- Aho-Corasick ---------------------------------------------------------
     def _build_ac(self, patterns: list[str]) -> None:
@@ -306,36 +287,24 @@ class AliasMatcher:
     def find(self, text: str) -> list[tuple]:
         if self.engine == "tok":
             return self._find_tok(text)
-        if self.engine == "ac":
-            return self._find_ac(text)
-        if self.rx is None:
-            return []
-        out = []
-        for m in self.rx.finditer(text):
-            alias = m.group(1)
-            db, ent_id, entry_name, prior = self.lookup[alias]
-            out.append((m.start(), m.end(), alias, db, ent_id, entry_name, prior))
-        return out
+        return self._find_ac(text)
 
 
-def _get_matcher(bc, token: str, engine: str = "auto") -> AliasMatcher:
+def _get_matcher(bc, token: str) -> AliasMatcher:
     matcher = _MATCHER_CACHE.get(token)
     if matcher is None:
         if len(_MATCHER_CACHE) >= 8:  # bound worker memory across many runs
             _MATCHER_CACHE.clear()
-        matcher = AliasMatcher(bc.value, engine=engine)
+        matcher = AliasMatcher(bc.value)
         _MATCHER_CACHE[token] = matcher
     return matcher
 
 
-def detect_mentions(
-    sentences: DataFrame, alias_rows: list, engine: str = "auto"
-) -> DataFrame:
+def detect_mentions(sentences: DataFrame, alias_rows: list) -> DataFrame:
     """sentences -> MENTIONS schema (sentence + array<mention struct>).
 
     ``alias_rows``: list of (alias, db, id, entry_name, prior) broadcast to
-    every executor. ``engine`` selects the matcher implementation (see
-    ``AliasMatcher``); ``auto`` switches to Aho-Corasick for big dicts.
+    every executor; the matcher is built once per Python worker.
     """
     spark = sentences.sparkSession
     bc = spark.sparkContext.broadcast(list(alias_rows))
@@ -343,7 +312,7 @@ def detect_mentions(
 
     @F.pandas_udf(ArrayType(MENTION))
     def _annotate(sent: pd.Series) -> pd.Series:
-        matcher = _get_matcher(bc, token, engine)
+        matcher = _get_matcher(bc, token)
         return pd.Series(
             [
                 [
@@ -389,9 +358,6 @@ def explode_mentions(mentions_df: DataFrame) -> DataFrame:
     )
 
 
-_SINGLE_TOKEN_RE = re.compile(r"[\w-]+")
-
-
 def count_mentions_native(
     sentences: DataFrame, alias_rows: list, engine: str = "auto"
 ) -> DataFrame:
@@ -422,8 +388,9 @@ def count_mentions_native(
         than the alternation regex and keeps two structural wins: zero
         Python runtime on the hot path (pure-JVM deployability) and
         per-row cost flat in dictionary size.
-      * ``regex`` — general fallback for multi-token aliases: the same
-        length-desc ordered alternation as ``AliasMatcher`` via
+      * ``regex`` — general fallback for multi-token aliases: the
+        leftmost-longest semantics of ``AliasMatcher`` as one length-desc
+        ordered alternation via
         ``regexp_extract_all`` with ``(?U)`` word-boundary lookarounds.
         Correct for any alias shape, but the JVM regex engine scans the
         alternation per character — at round-1 dictionary sizes it measured
@@ -433,17 +400,17 @@ def count_mentions_native(
     ``auto`` picks ``tokenize`` whenever the dictionary allows it.
     """
     spark = sentences.sparkSession
-    matcher = AliasMatcher(alias_rows)
-    if not matcher.lookup:
+    lookup = _top1(alias_rows)
+    if not lookup:
         return spark.createDataFrame([], "entry_name string, n_mentions long")
     amap = spark.createDataFrame(
-        [(a, v[2]) for a, v in matcher.lookup.items()],
+        [(a, v[2]) for a, v in lookup.items()],
         "alias string, entry_name string",
     )
     if engine == "auto":
         engine = (
             "tokenize"
-            if all(_SINGLE_TOKEN_RE.fullmatch(a) for a in matcher.lookup)
+            if all(_TOKEN_RE.fullmatch(a) for a in lookup)
             else "regex"
         )
     if engine == "tokenize":
@@ -453,12 +420,12 @@ def count_mentions_native(
         # hits are exploded — the explode-everything variant measured slower
         # than the Python matcher because it shuffled every token.
         toks = F.split(F.col("sentence"), r"(?U)[^\w\-]+")
-        aliases = list(matcher.lookup)
+        aliases = list(lookup)
         if len(aliases) <= 1024:
             toks = F.filter(toks, lambda t: t.isin(aliases))
         hits = sentences.select(F.explode(toks).alias("alias"))
     else:
-        ordered = sorted(matcher.lookup, key=len, reverse=True)
+        ordered = sorted(lookup, key=len, reverse=True)
         pattern = (
             r"(?U)(?<![\w-])("
             + "|".join(re.escape(a) for a in ordered)

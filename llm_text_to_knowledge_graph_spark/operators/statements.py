@@ -247,19 +247,7 @@ def extract_cooccurrence(mentions_df: DataFrame) -> DataFrame:
             out.append(stmts)
         return pd.Series(out)
 
-    return (
-        mentions_df.withColumn("results", _cooc(F.col("sentence"), F.col("mentions")))
-        .filter(F.size("results") > 0)
-        .select("url", "warc_ts", "para_idx", "sent_idx", F.explode("results").alias("r"))
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.col("r.bel_statement").alias("bel_statement"),
-            F.col("r.evidence").alias("evidence"),
-        )
-    )
+    return _explode_results(mentions_df, _cooc(F.col("sentence"), F.col("mentions")))
 
 
 def extract_statements(
@@ -286,25 +274,18 @@ def extract_statements(
             ]
         )
 
-    return (
-        mentions_df.withColumn(
-            "results", _extract(F.col("sentence"), F.col("mentions"))
-        )
-        # F9 empty-result filter (grounding_genes.py:65-68)
-        .filter(F.size("results") > 0)
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.explode("results").alias("r"),
-        )
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.col("r.bel_statement").alias("bel_statement"),
-            F.col("r.evidence").alias("evidence"),
-        )
+    return _explode_results(
+        mentions_df, _extract(F.col("sentence"), F.col("mentions"))
     )
+
+
+def _explode_results(df: DataFrame, results) -> DataFrame:
+    """One STATEMENTS row per element of the array<STATEMENT> UDF column.
+
+    The explode drops the sentences with no result (the F9 empty-result
+    filter, grounding_genes.py:65-68). It is the only consumer of the UDF
+    column: a filter on it would be pushed below the projection with the
+    UDF inlined, and Spark would evaluate the UDF twice per row."""
+    return df.select(
+        "url", "warc_ts", "para_idx", "sent_idx", F.explode(results).alias("r")
+    ).select("url", "warc_ts", "para_idx", "sent_idx", "r.bel_statement", "r.evidence")

@@ -4,8 +4,9 @@ pages -> paragraphs -> sentences -> mentions -> statements -> triples
       -> nodes + edges
 
 Two modes:
-  * lazy (workdir=None): one Catalyst plan end to end — UDF stages fuse into
-    scan-side projections, no materialization.
+  * lazy (workdir=None): one Catalyst plan end to end — extraction is one
+    Python crossing (operators/fused.py) and every stage a relational view
+    of it, no materialization.
   * checkpointed (workdir set): each stage commits an atomic snapshot via
     the TableStore shim with per-partition lineage + a metrics row; a rerun
     with the same input fingerprint resumes past completed stages
@@ -19,6 +20,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.extraction import extract_statements_extended
+from ..operators.fused import ENGINES, extract_sentence_level_fused
 from ..operators.graph import annotation_map, build_edges, build_nodes
 from ..operators.mentions import detect_mentions, explode_mentions
 from ..operators.paragraphs import extract_paragraphs, split_into_sentences
@@ -50,7 +53,6 @@ def run_pipeline(
     broadcast_nodes: bool = False,
     persist: bool = False,
     id_strategy: str = "dense",
-    fuse: bool = True,
     extractor: str = "sentence",
 ) -> dict:
     """Run the full pipeline; returns dict of stage-name -> DataFrame plus
@@ -61,43 +63,37 @@ def run_pipeline(
     sentence-sliced mentions; ``"block"`` runs the extended paragraph-level
     pattern engine (``operators.extraction``) — coordination, displaced-agent
     passives, nominalizations, fold-continuations, cnc+pretreatment synergy —
-    as ONE fused C1+C2 Python crossing over whole paragraphs
-    (``extract_statements_extended``). Block statements carry ``sent_idx = 0``
+    over whole paragraphs. Block statements carry ``sent_idx = 0``
     (evidence is the whole paragraph). The sentences/mentions stages are
-    unchanged either way.
+    the same either way. ``"sentence"`` is the throughput default; pick
+    ``"block"`` for real prose, where its cross-clause patterns earn the
+    measured real-gold recall (tests/test_real_gold.py).
 
-    Default decision (r3, evidence-based): ``"sentence"`` stays the
-    throughput default — warm sf0.1 measures the fused block engine ~8%
-    slower while emitting identical triples on corpora whose relations are
-    sentence-local by construction. Pick ``"block"`` for real prose, where
-    its cross-clause patterns earn the measured real-gold recall
-    (tests/test_real_gold.py); both engines are benched every round
-    (``kg_extract_fused`` vs ``kg_extract_fused_block``).
+    Lazy mode (``workdir=None``) runs extraction as ONE Python crossing,
+    ``operators.fused.extract_sentence_level_fused`` with the chosen
+    engine, and derives the sentences, mentions, statements, triples and
+    flat_mentions stages as relational views of it. Checkpointed runs use
+    the modular per-stage chain: each stage is a table with its own
+    lineage, and tests pin the two modes row-for-row.
 
-    ``persist=True`` caches the multiply-referenced stages MEMORY_AND_DISK
-    in lazy mode — without it the graph build re-executes the extraction
+    ``persist=True`` caches the lazy crossing and the node table
+    MEMORY_AND_DISK — without it the graph build re-executes the extraction
     once per downstream reference. The checkpointed mode gets the same cut
     for free from its parquet snapshots.
-
-    ``fuse=True`` (lazy mode only): run extraction as ONE fused Python
-    crossing (``extract_sentence_level_fused``) and derive every stage
-    relationally — same outputs, ~5x fewer Arrow round-trips. ``fuse=False``
-    forces the modular five-UDF chain (each stage independently computed).
-    Checkpointed runs always use the modular chain: each stage is a table
-    with its own lineage.
     """
     from pyspark import StorageLevel
 
+    if extractor not in ENGINES:
+        raise ValueError(f"unknown extractor {extractor!r}")
     par = parallelism or spark.sparkContext.defaultParallelism * 2
     # real Iceberg when a SparkCatalog is configured, parquet shim here
     store = make_table_store(spark, workdir) if workdir else None
     metrics: list[dict] = []
-    _multi_ref = {"mentions", "triples", "nodes"}
 
     def stage(name: str, thunk, token_extra: str = ""):
         if store is None:
             df = thunk()
-            if persist and name in _multi_ref:
+            if persist and name == "nodes":
                 df = df.persist(StorageLevel.MEMORY_AND_DISK)
             return df
         t0 = time.monotonic()
@@ -116,52 +112,28 @@ def run_pipeline(
         )
         return df
 
-    if store is None and fuse:
-        # Lazy mode: ONE Python crossing computes sentences + mentions +
-        # parsed statements (operators/fused.py); every stage below is a
-        # relational view of it. The modular five-UDF chain stacks five
-        # ArrowEvalPython/MapInPandas nodes in one physical stage — each
-        # chained node holds its own Python worker per task (measured 2-7x
-        # slowdown from worker oversubscription) — so it is reserved for
-        # checkpointed runs where stages materialize to tables anyway.
-        from ..operators.fused import extract_sentence_level_fused
-
-        base = extract_sentence_level_fused(pages, alias_rows, lang=lang)
+    if store is None:
+        # every stage below is a relational view of one crossing; chained
+        # UDF stages would each hold their own Python worker per task
+        base = extract_sentence_level_fused(pages, alias_rows, lang=lang, engine=extractor)
         if persist:
             base = base.persist(StorageLevel.MEMORY_AND_DISK)
         paragraphs = extract_paragraphs(pages, lang=lang)  # lazy; free unless used
         sentences = base.select("url", "warc_ts", "para_idx", "sent_idx", "sentence")
         mentions = base.drop("results")
-        statements = (
-            base.filter(F.size("results") > 0)
-            .select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.explode("results").alias("r"),
-            )
-            .select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.col("r.bel_statement").alias("bel_statement"),
-                F.col("r.evidence").alias("evidence"),
-            )
+        results = base.select(
+            "url", "warc_ts", "para_idx", "sent_idx", F.explode("results").alias("r")
         )
-        triples = (
-            base.select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.explode("results").alias("r"),
-            )
-            .select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.col("r.subj").alias("subj"),
-                F.col("r.pred").alias("pred"),
-                F.col("r.obj").alias("obj"),
-                F.col("r.bel_statement").alias("bel_statement"),
-                F.col("r.evidence").alias("evidence"),
-            )
-            .filter(
-                F.col("subj").isNotNull()
-                & F.col("pred").isNotNull()
-                & F.col("obj").isNotNull()
-            )
+        statements = results.select(
+            "url", "warc_ts", "para_idx", "sent_idx", "r.bel_statement", "r.evidence"
+        )
+        triples = results.select(
+            "url", "warc_ts", "para_idx", "sent_idx",
+            "r.subj", "r.pred", "r.obj", "r.bel_statement", "r.evidence",
+        ).filter(
+            F.col("subj").isNotNull()
+            & F.col("pred").isNotNull()
+            & F.col("obj").isNotNull()
         )
         flat_mentions = explode_mentions(mentions)
     else:
@@ -177,19 +149,15 @@ def run_pipeline(
             statements = stage("statements", lambda: extract_statements(mentions))
             triples = stage("triples", lambda: parse_triples(statements))
         flat_mentions = stage("flat_mentions", lambda: explode_mentions(mentions))
-    if extractor == "block":
-        from ..operators.extraction import extract_statements_extended
-
-        statements = stage(
-            "statements_block",
-            lambda: extract_statements_extended(paragraphs, alias_rows),
-            token_extra=":block",
-        )
-        triples = stage(
-            "triples", lambda: parse_triples(statements), token_extra=":block"
-        )
-    elif extractor != "sentence":
-        raise ValueError(f"unknown extractor {extractor!r}")
+        if extractor == "block":
+            statements = stage(
+                "statements_block",
+                lambda: extract_statements_extended(paragraphs, alias_rows),
+                token_extra=":block",
+            )
+            triples = stage(
+                "triples", lambda: parse_triples(statements), token_extra=":block"
+            )
     ann_map = annotation_map(flat_mentions)
     # id_strategy participates in the snapshot fingerprint: resuming a dense
     # run under --id-strategy hash (or vice versa) must recompute, not serve

@@ -1,9 +1,11 @@
 """Profile the fused-extraction hot loop WITHOUT Spark.
 
-The fused operator's per-batch body (html -> paragraphs -> sentences ->
-mentions -> statements -> triples) is pure Python; Spark only schedules it.
-Profiling it driver-side over a synthetic page sample therefore shows the
-exact per-function cost structure the executors see, with zero scheduler
+The fused operators' per-batch body (``operators.fused.extract_batch``:
+html -> paragraphs -> sentences -> mentions -> statements -> triples) is
+pure Python; Spark only schedules it. This script calls that same function
+on one pandas batch of synthetic pages, as ``extract_triples_fused`` (or
+``extract_triples_fused_block``) does inside a worker, so the profile shows
+the per-function cost structure the executors see, with zero scheduler
 noise. Run:
 
     python scripts/profile_fused.py [n_docs] [engine]
@@ -25,6 +27,8 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     engine = sys.argv[2] if len(sys.argv) > 2 else "sentence"
 
+    import pandas as pd
+
     # Generate pages without a SparkSession: corpus.py's row synthesis is
     # pure; reuse its per-doc builder directly.
     from llm_text_to_knowledge_graph_spark.corpus import (
@@ -32,62 +36,35 @@ def main() -> None:
         build_entities,
         gen_doc,
     )
+    from llm_text_to_knowledge_graph_spark.operators.fused import (
+        ENGINES,
+        extract_batch,
+        triple_rows,
+    )
+    from llm_text_to_knowledge_graph_spark.operators.mentions import AliasMatcher
 
+    if engine not in ENGINES:
+        sys.exit(f"engine must be one of {ENGINES}, not {engine!r}")
     entities = build_entities(seed=42)
     alias_rows = build_alias_rows(seed=42)
-    rows = [
-        r
-        for i in range(n_docs)
-        for r in [gen_doc(42, i, entities)]
-        if r["lang"] == "en"
-    ]
-
-    from llm_text_to_knowledge_graph_spark.functions.bel import split_statement
-    from llm_text_to_knowledge_graph_spark.operators.mentions import AliasMatcher
-    from llm_text_to_knowledge_graph_spark.operators.statements import (
-        extract_parts_from_sentence,
+    pages = pd.DataFrame(
+        [
+            r
+            for i in range(n_docs)
+            for r in [gen_doc(42, i, entities)]
+            if r["lang"] == "en"
+        ]
     )
-    from llm_text_to_knowledge_graph_spark.sources.html_extract import (
-        extract_paragraphs_text,
-        split_sentences,
-    )
-
     matcher = AliasMatcher(alias_rows)
-    if engine == "block":
-        from llm_text_to_knowledge_graph_spark.operators.extraction import (
-            extract_from_block,
-            normalize_block_text,
-        )
-
     n_triples = 0
 
     def work() -> None:
         nonlocal n_triples
-        for r in rows:
-            html, text = r["html"], r["text"]
-            for para in extract_paragraphs_text(html, text):
-                if engine == "block":
-                    para = normalize_block_text(para)
-                    mentions = [
-                        {"begin": b, "end": e, "alias": a, "db": db,
-                         "id": i, "entry_name": n, "score": p}
-                        for (b, e, a, db, i, n, p) in matcher.find(para)
-                    ]
-                    for stmt, _ev in extract_from_block(para, mentions):
-                        if all(split_statement(stmt)):
-                            n_triples += 1
-                else:
-                    for sentence in split_sentences(para):
-                        mentions = [
-                            {"begin": b, "end": e, "db": db, "entry_name": n}
-                            for (b, e, _a, db, _i, n, _p) in matcher.find(sentence)
-                        ]
-                        # mirrors fused.extract_triples_fused: parts come
-                        # pre-split, no split_statement re-parse
-                        for _parts in extract_parts_from_sentence(
-                            sentence, mentions
-                        ):
-                            n_triples += 1
+        # the arguments of extract_triples_fused / extract_triples_fused_block
+        rows = extract_batch(
+            pages, matcher, triple_rows, engine, sentences=engine != "block"
+        )
+        n_triples = len(rows)
 
     t0 = time.perf_counter()
     prof = cProfile.Profile()

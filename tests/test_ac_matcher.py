@@ -1,20 +1,42 @@
-"""Aho-Corasick alias-matcher engine: exact parity with the regex engine.
+"""Alias-matcher engines: exact parity with an alternation-regex oracle.
 
-The two engines must produce identical mention tuples on any input — the
-AC path is the at-scale engine (O(text) scan regardless of dictionary
-size), the alternation regex is the reference semantics.
+The token-index (``tok``) and Aho-Corasick (``ac``) engines must produce
+identical mention tuples on any input. The oracle below is the reference
+semantics: one alternation ordered by length desc, so at each position the
+longest boundary-valid alias wins and the scan resumes at the match end.
 """
 
 import random
+import re
 import string
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from llm_text_to_knowledge_graph_spark.operators.mentions import (
-    _AC_THRESHOLD,
     AliasMatcher,
+    _top1,
 )
+
+
+class RegexOracle:
+    """Leftmost-longest alias scan as one length-desc alternation regex."""
+
+    def __init__(self, alias_rows):
+        self.lookup = _top1(alias_rows)
+        ordered = sorted(self.lookup, key=len, reverse=True)
+        pattern = "|".join(re.escape(a) for a in ordered)
+        self.rx = re.compile(rf"(?<![\w-])({pattern})(?![\w-])") if ordered else None
+
+    def find(self, text):
+        if self.rx is None:
+            return []
+        out = []
+        for m in self.rx.finditer(text):
+            alias = m.group(1)
+            db, ent_id, entry_name, prior = self.lookup[alias]
+            out.append((m.start(), m.end(), alias, db, ent_id, entry_name, prior))
+        return out
 
 ROWS = [
     ("spark", "V", "1", "SPARK", 1.0),
@@ -46,7 +68,7 @@ def _pairs(m, texts):
 
 
 def test_engines_agree_on_tricky_corpus():
-    rx = AliasMatcher(ROWS, engine="regex")
+    rx = RegexOracle(ROWS)
     ac = AliasMatcher(ROWS, engine="ac")
     tok = AliasMatcher(ROWS, engine="tok")
     assert _pairs(rx, TRICKY) == _pairs(ac, TRICKY) == _pairs(tok, TRICKY)
@@ -55,7 +77,7 @@ def test_engines_agree_on_tricky_corpus():
 
 
 def test_top1_disambiguation_identical():
-    rx = AliasMatcher(ROWS, engine="regex")
+    rx = RegexOracle(ROWS)
     ac = AliasMatcher(ROWS, engine="ac")
     got_rx = rx.find("b")
     got_ac = ac.find("b")
@@ -68,7 +90,7 @@ def test_top1_disambiguation_identical():
     st.text(alphabet=" abcdeé+-_,.()", min_size=0, max_size=60),
 )
 def test_engines_agree_property(text):
-    rx = AliasMatcher(ROWS, engine="regex")
+    rx = RegexOracle(ROWS)
     ac = AliasMatcher(ROWS, engine="ac")
     tok = AliasMatcher(ROWS, engine="tok")
     assert rx.find(text) == ac.find(text) == tok.find(text)
@@ -88,7 +110,7 @@ WEIRD_ROWS = ROWS + [
 def test_engines_agree_weird_alias_property(text):
     """Aliases that start with a non-word char exercise the token-index
     engine's lookahead sweep + merged greedy tail."""
-    rx = AliasMatcher(WEIRD_ROWS, engine="regex")
+    rx = RegexOracle(WEIRD_ROWS)
     ac = AliasMatcher(WEIRD_ROWS, engine="ac")
     tok = AliasMatcher(WEIRD_ROWS, engine="tok")
     assert rx.find(text) == ac.find(text) == tok.find(text)
@@ -102,7 +124,7 @@ def test_engines_agree_random_dictionary():
         alias = "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 6))).strip()
         if alias:
             rows.append((alias, "R", str(i), alias.upper(), rng.random()))
-    rx = AliasMatcher(rows, engine="regex")
+    rx = RegexOracle(rows)
     ac = AliasMatcher(rows, engine="ac")
     tok = AliasMatcher(rows, engine="tok")
     for _ in range(300):
@@ -110,17 +132,27 @@ def test_engines_agree_random_dictionary():
         assert rx.find(text) == ac.find(text) == tok.find(text), text
 
 
-def test_auto_threshold_selects_tok():
-    rows = [(f"alias{i}", "V", str(i), f"A{i}", 1.0) for i in range(_AC_THRESHOLD)]
-    assert AliasMatcher(rows).engine == "tok"
-    assert AliasMatcher(rows[:10]).engine == "regex"
+def test_auto_selects_tok_at_every_size():
+    rows = [(f"alias{i}", "V", str(i), f"A{i}", 1.0) for i in range(2048)]
+    for n in (0, 1, 10, 2048):
+        assert AliasMatcher(rows[:n]).engine == "tok"
+    assert AliasMatcher([]).find("alias7 and alias1999") == []
     # identical results any way
     text = "alias7 and alias1999 and alias2048x"
     assert (
         AliasMatcher(rows, engine="ac").find(text)
-        == AliasMatcher(rows, engine="regex").find(text)
-        == AliasMatcher(rows, engine="tok").find(text)
+        == RegexOracle(rows).find(text)
+        == AliasMatcher(rows).find(text)
     )
+    small = rows[:10]
+    assert AliasMatcher(small).find(text) == RegexOracle(small).find(text)
+
+
+def test_unknown_engine_rejected():
+    import pytest
+
+    with pytest.raises(ValueError, match="regex"):
+        AliasMatcher(ROWS, engine="regex")
 
 
 def test_auto_falls_back_to_ac_on_pathological_sharing():
@@ -129,7 +161,7 @@ def test_auto_falls_back_to_ac_on_pathological_sharing():
     # auto must keep the dictionary-invariant automaton
     rows = [
         (f"tnf {'x' * (i % 7)} v{i}", "V", str(i), f"A{i}", 1.0)
-        for i in range(_AC_THRESHOLD + 300)
+        for i in range(2048 + 300)
     ]
     m = AliasMatcher(rows)
     assert m.engine == "ac"
